@@ -22,11 +22,13 @@ import scala.jdk.CollectionConverters._
   * `try_cast` (SURVEY.md §1.2). Zip archives are extracted to a temp dir on
   * the driver first — Spark cannot read inside zips; for 100 TB-scale
   * archives the expectation is extracted files on distributed storage.
+  * `close()` deletes that extraction once the frames' actions are done.
   */
 final class DwcaArchive private (
     val spark: SparkSession,
     val descriptor: ArchiveDescriptor,
-    rootDir: File) {
+    rootDir: File,
+    extractedDir: Option[File]) extends AutoCloseable {
 
   def coreDataFrame: DataFrame = read(descriptor.core)
 
@@ -114,17 +116,26 @@ final class DwcaArchive private (
     // nullValue covers — normalize them to null so presence counts, id
     // checks, and vocab nulls match the reference on archives containing
     // literal "NA"/"NULL"/"NaN"/… values.
-    val naNormalized = renamed.columns.foldLeft(renamed) { (df, c) =>
-      df.withColumn(c,
-        when(col(s"`$c`").isin(DwcaArchive.PandasNaTokens: _*), lit(null))
-          .otherwise(col(s"`$c`")))
+    //
+    // One projection for the whole table: a per-column withColumn fold
+    // re-analyses the growing plan once per column, which dominates a
+    // 190-column archive's read.
+    val naNormalized = renamed.columns.toSeq.map { c =>
+      when(col(s"`$c`").isin(DwcaArchive.PandasNaTokens: _*), lit(null))
+        .otherwise(col(s"`$c`")).as(c)
     }
     // meta.xml <field term=… default=…/> with no index → constant column.
-    table.defaultOnlyFields.foldLeft(naNormalized) { (df, f) =>
-      if (df.columns.contains(f.localName)) df
-      else df.withColumn(f.localName, lit(f.default.orNull))
-    }
+    val defaults = table.defaultOnlyFields
+      .filterNot(f => renamed.columns.contains(f.localName))
+      .distinctBy(_.localName)
+      .map(f => lit(f.default.orNull).as(f.localName))
+    renamed.select(naNormalized ++ defaults: _*)
   }
+
+  /** Deletes the directory a zip was extracted to (no-op for a directory
+    * archive). Frames read from this archive must not be used after.
+    */
+  override def close(): Unit = extractedDir.foreach(DwcaArchive.deleteTree)
 }
 
 object DwcaArchive {
@@ -139,9 +150,8 @@ object DwcaArchive {
     */
   def starJoin(core: DataFrame, extDf: DataFrame, extRowTypeLocalName: String): DataFrame = {
     val prefix = extRowTypeLocalName.toLowerCase
-    val renamed = extDf.columns.foldLeft(extDf) { (df, c) =>
-      if (c == "coreid") df else df.withColumnRenamed(c, s"${prefix}_$c")
-    }
+    val renamed = extDf.toDF(extDf.columns.toSeq.map(c =>
+      if (c == "coreid") c else s"${prefix}_$c"): _*)
     core.join(renamed, core("id") === renamed("coreid"), "left")
   }
 
@@ -154,18 +164,31 @@ object DwcaArchive {
     "1.#IND", "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN", "None",
     "n/a", "nan", "null")
 
-  /** Open an archive at `path` (directory, or .zip extracted to a temp dir). */
+  /** Open an archive at `path` (directory, or .zip extracted to a temp dir
+    * that the returned archive's `close()` deletes).
+    */
   def open(spark: SparkSession, path: String): DwcaArchive = {
     val f = new File(path)
-    val dir =
-      if (f.isDirectory) f
-      else if (f.isFile) extractZip(f)
+    val extracted =
+      if (f.isDirectory) None
+      else if (f.isFile) Some(extractZip(f))
       else throw new IllegalArgumentException(s"archive not found: $path")
-    val meta = new File(dir, "meta.xml")
-    if (!meta.isFile)
-      throw new IllegalArgumentException(s"no meta.xml in archive: $path")
-    new DwcaArchive(spark, MetaXml.parse(meta), dir)
+    val dir = extracted.getOrElse(f)
+    try {
+      val meta = new File(dir, "meta.xml")
+      if (!meta.isFile)
+        throw new IllegalArgumentException(s"no meta.xml in archive: $path")
+      new DwcaArchive(spark, MetaXml.parse(meta), dir, extracted)
+    } catch {
+      case e: Throwable => extracted.foreach(deleteTree); throw e
+    }
   }
+
+  private[dwca] def deleteTree(dir: File): Unit =
+    if (dir.exists())
+      Files.walk(dir.toPath)
+        .sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
 
   /** Ceiling on driver-side extraction (bytes). Zip archives are unpacked
     * on the driver — the one deliberately non-distributed step (matches
@@ -217,11 +240,7 @@ object DwcaArchive {
       zf.close()
       // deleteOnExit is a no-op on a non-empty dir: a failed extraction
       // (cap breach, bad entry) must not leave partial gigabytes behind
-      if (!ok) {
-        Files.walk(tmp.toPath)
-          .sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+      if (!ok) deleteTree(tmp)
     }
     tmp
   }

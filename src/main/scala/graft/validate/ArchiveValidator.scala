@@ -29,6 +29,15 @@ object ArchiveValidator {
       idFields: Seq[String] = Nil,
       referenceCompatibleNumericWarnings: Boolean = false): DwCAValidationReport = {
     val archive = DwcaArchive.open(spark, path)
+    // every action below finishes before close() deletes a zip's extraction
+    try report(archive, idFields, referenceCompatibleNumericWarnings)
+    finally archive.close()
+  }
+
+  private def report(
+      archive: DwcaArchive,
+      idFields: Seq[String],
+      referenceCompatibleNumericWarnings: Boolean): DwCAValidationReport = {
     val core = archive.descriptor.core
     val coreDf = archive.coreDataFrame
     val coreType = core.rowType

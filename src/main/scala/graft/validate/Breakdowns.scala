@@ -1,6 +1,7 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -10,13 +11,13 @@ import Lenient.qcol
 /** Group-by summary statistics for the archive report (reference:
   * dwc_validator/breakdown.py).
   *
-  * Scale notes: the three simple histograms (year/month/day) fuse into ONE
-  * grouping-sets aggregation pass, as do the three eventDate-derived
-  * histograms — 2 scans instead of the reference's 6. Top-k breakdowns plan
-  * as TakeOrderedAndProject (bounded, no full-sort materialization).
-  * Histogram key cardinality is expected small (years/months/days); top-k is
-  * capped at 20 — nothing unbounded is ever collected to the driver except
-  * the simple histograms the reference also materializes in full.
+  * Scale notes: every breakdown — the year/month/day histograms, the two
+  * top-20s and the eventDate-derived histograms — is one set of ONE
+  * grouping-sets aggregation, so a report's breakdowns cost one scan
+  * instead of the reference's eight. A `row_number()` per set bounds what
+  * reaches the driver: 20 rows per top-20, [[HistogramMaxGroups]] + 1 per
+  * histogram (overflow is detected, never truncated). Histogram key
+  * cardinality is expected small (years/months/days).
   */
 object Breakdowns {
 
@@ -28,61 +29,89 @@ object Breakdowns {
     */
   val HistogramMaxGroups = 10000
 
+  /** Rows kept per top-value breakdown (breakdown.py:54-62). */
+  private val TopLimit = 20
+
+  /** One breakdown: its report key, its grouping key, and whether it is a
+    * top-20 or an eventDate-derived histogram.
+    */
+  private final case class Key(field: String, value: Column, top: Boolean, derived: Boolean)
+
   /** Reference: breakdown.py:9-34 (`generate_breakdowns`), including the
     * eventDate-derived histograms overwriting the plain year/month/day ones
     * (SURVEY.md T7). Keys are normalized to strings.
     */
   def generate(df: DataFrame): ListMap[String, ListMap[String, Long]] = {
     val has = df.columns.toSet
+    val ts = col("__ts")
+    val keys =
+      Seq("year", "month", "day").filter(has)
+        .map(f => Key(f, qcol(f).cast("string"), top = false, derived = false)) ++
+      Seq("scientificName", "family").filter(has)
+        .map(f => Key(f, qcol(f).cast("string"), top = true, derived = false)) ++
+      (if (!has("eventDate")) Nil
+       else Seq("year" -> year(ts), "month" -> month(ts), "day" -> dayofmonth(ts))
+         .map { case (f, c) => Key(f, c.cast("string"), top = false, derived = true) })
     var out = ListMap.empty[String, ListMap[String, Long]]
-
-    // year/month/day simple histograms — one grouping-sets pass.
-    val simpleFields = Seq("year", "month", "day").filter(has)
-    if (simpleFields.nonEmpty) {
-      val hists = groupingSetHistograms(df, simpleFields.map(f => f -> qcol(f).cast("string")))
-      simpleFields.foreach { f =>
-        // pandas value_counts drops nulls and orders by count desc
-        // (breakdown.py:72-74); ties broken by key for determinism.
-        out += f -> sortByCountDesc(hists(f))
-      }
-    }
-
-    // top-20 value breakdowns (breakdown.py:54-62).
-    Seq("scientificName", "family").filter(has).foreach { f =>
-      out += f -> topValues(df, f, 20)
-    }
-
-    // eventDate-derived year/month/day histograms (breakdown.py:77-102)
-    // overwrite the simple ones; pandas groupby sorts by key ascending.
-    if (has("eventDate")) {
-      val ts = Lenient.toTimestamp(qcol("eventDate"))
-      val parsed = df.select(ts.as("__ts")).filter(col("__ts").isNotNull)
-      val hists = groupingSetHistograms(parsed, Seq(
-        "year" -> year(col("__ts")).cast("string"),
-        "month" -> month(col("__ts")).cast("string"),
-        "day" -> dayofmonth(col("__ts")).cast("string")))
-      Seq("year", "month", "day").foreach { f =>
-        out = overwrite(out, f, sortByKeyNumeric(hists(f)))
-      }
+    if (keys.nonEmpty) keys.zip(groupCounts(df, keys)).foreach {
+      // pandas value_counts drops nulls and orders by count desc
+      // (breakdown.py:72-74); ties broken by key for determinism.
+      case (k, g) if !k.top && !k.derived => out += k.field -> sortByCountDesc(g)
+      // top-20 value breakdowns (breakdown.py:54-62), already in rank order.
+      case (k, g) if k.top => out += k.field -> ListMap(g: _*)
+      // eventDate-derived year/month/day histograms (breakdown.py:77-102)
+      // overwrite the simple ones; pandas groupby sorts by key ascending.
+      case (k, g) => out = overwrite(out, k.field, sortByKeyNumeric(g))
     }
     out
   }
 
-  /** Reference: breakdown.py:37-51 (`field_populated_counts`) — kept for API
-    * parity; Validator already fuses these counts into its single pass.
+  /** Every key's (value, count) groups from ONE grouping-sets job, nulls
+    * dropped (value_counts semantics): a top-20 key's first 20 in rank order
+    * (count desc, value asc — pandas tie order is nondeterministic, SURVEY.md
+    * A13), a histogram's groups in any order. A histogram with more than
+    * [[HistogramMaxGroups]] groups throws.
     */
-  def fieldPopulatedCounts(df: DataFrame): ListMap[String, Long] = {
-    val cols = df.columns.toSeq
-    if (cols.isEmpty) return ListMap.empty
-    // chunk like Validator.fusedAggregation: one agg of 180+ count
-    // expressions blows spark.sql.codegen.maxFields and silently drops the
-    // whole scan out of whole-stage codegen on real-world-wide archives
-    val counts = cols.grouped(Validator.MaxAggsPerPass).flatMap { chunk =>
-      val aggs = chunk.map(c => count(qcol(c)).as(s"cc__$c"))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      chunk.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }
-    }.toSeq
-    ListMap(counts: _*)
+  private def groupCounts(df: DataFrame, keys: Seq[Key]): Seq[Seq[(String, Long)]] = {
+    val names = keys.indices.map(i => s"__k$i")
+    // __ts is projected once below the derived keys, so the eventDate
+    // parse runs once per row, not once per derived histogram
+    val withTs =
+      if (keys.exists(_.derived)) df.select(col("*"), Lenient.toTimestamp(qcol("eventDate")).as("__ts"))
+      else df
+    val projected = withTs.select(keys.zip(names).map { case (k, n) => k.value.as(n) }: _*)
+    // grouping_id() sets bit (n-1-i) when key i is grouped out
+    val all = (1L << keys.size) - 1
+    val setOf = keys.indices.map(i => all & ~(1L << (keys.size - 1 - i)))
+    val topSets = keys.indices.filter(keys(_).top).map(setOf)
+    // In a single-key set every other key is grouped out (null), so the
+    // coalesce is the set's own key.
+    val rows = projected
+      .groupingSets(names.map(n => Seq(col(n))), names.map(col): _*)
+      .agg(grouping_id().as("__set"), count(lit(1)).as("__cnt"))
+      .select(col("__set"), coalesce(names.map(col): _*).as("__key"), col("__cnt"))
+      .filter(col("__key").isNotNull)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("__set").orderBy(col("__cnt").desc, col("__key").asc)))
+      // cap+1 rows so overflow is DETECTED: a bare cut at the cap would
+      // silently keep an arbitrary subset of groups and return a wrong
+      // histogram with no error. The literal bound is what Spark's window
+      // group limit reads; at the default spark.sql.optimizer.
+      // windowGroupLimitThreshold (1000) it does not fire, so each set's
+      // groups are sorted whole in one task.
+      .filter(col("__rn") <= HistogramMaxGroups + 1 &&
+        (!col("__set").isin(topSets: _*) || col("__rn") <= TopLimit))
+      .collect()
+      .groupBy(_.getAs[Number]("__set").longValue)
+    keys.indices.map { i =>
+      val g = rows.getOrElse(setOf(i), Array.empty[Row]).sortBy(_.getAs[Int]("__rn"))
+      if (g.length > HistogramMaxGroups)
+        throw new IllegalStateException(
+          s"histogram group cardinality exceeds HistogramMaxGroups=$HistogramMaxGroups " +
+            s"for field ${keys(i).field}; a truncated histogram would be silently " +
+            "wrong — use topValues() for high-cardinality columns")
+      g.map(r => r.getAs[String]("__key") -> r.getAs[Long]("__cnt")).toSeq
+    }
   }
 
   /** Reference: breakdown.py:54-62 (`top_values_breakdown`). Plans as
@@ -98,36 +127,6 @@ object Breakdowns {
       .limit(limit)
       .collect()
     ListMap(rows.map(r => r.getString(0) -> r.getLong(1)).toIndexedSeq: _*)
-  }
-
-  /** All requested histograms in one pass via GROUPING SETS: each set is one
-    * single-column grouping, so one shuffle produces every histogram.
-    */
-  private def groupingSetHistograms(
-      df: DataFrame, fields: Seq[(String, Column)]): Map[String, Seq[(String, Long)]] = {
-    val projected = df.select(fields.map { case (n, c) => c.as(n) }: _*)
-    // Collect cap+1 rows so overflow is DETECTED: a bare limit(cap) would
-    // silently keep an arbitrary, nondeterministic subset of groups and
-    // return a wrong histogram with no error.
-    val grouped = projected
-      .groupingSets(fields.map(f => Seq(col(f._1))), fields.map(f => col(f._1)): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .limit(HistogramMaxGroups + 1)
-      .collect()
-    if (grouped.length > HistogramMaxGroups)
-      throw new IllegalStateException(
-        s"histogram group cardinality exceeds HistogramMaxGroups=$HistogramMaxGroups " +
-          s"for fields ${fields.map(_._1).mkString(",")}; a truncated histogram would " +
-          "be silently wrong — use topValues() for high-cardinality columns")
-    fields.map { case (name, _) =>
-      val idx = fields.indexWhere(_._1 == name)
-      // In a grouping-sets row, exactly one grouping column is non-null
-      // (nulls in the source were dropped by value_counts semantics anyway).
-      val entries = grouped.toSeq
-        .filter(r => !r.isNullAt(idx) && fields.indices.forall(j => j == idx || r.isNullAt(j)))
-        .map(r => r.getString(idx) -> r.getLong(fields.size))
-      name -> entries
-    }.toMap
   }
 
   private def sortByCountDesc(entries: Seq[(String, Long)]): ListMap[String, Long] =

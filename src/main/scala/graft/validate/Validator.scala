@@ -1,6 +1,7 @@
 package graft.validate
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -14,10 +15,11 @@ import Lenient.qcol
   *
   * Re-expresses the reference's per-check full scans (reference:
   * dwc_validator/validate.py — ~10 scans per report, SURVEY.md §3) as ONE
-  * fused `df.agg(...)` pass: every check below is an algebraic aggregate, so
-  * the whole report is a single partial/final HashAggregate job over the
-  * data (plus one tiny bounded job per vocabulary non-matching sample).
-  * At 100 TB that is the difference between 10 scans and 1.
+  * fused aggregation pass: every check below is an algebraic aggregate, and
+  * the vocabulary non-matching samples ride the same pass as extra grouping
+  * sets, so a report is a single job over the data (one more per further
+  * [[MaxAggsPerPass]] aggregates on wide archives). At 100 TB that is the
+  * difference between 10 scans and 1.
   */
 object Validator {
 
@@ -180,13 +182,13 @@ object Validator {
     // single aggregate would exceed spark.sql.codegen.maxFields (default
     // 100) and silently drop out of whole-stage codegen. Each chunk stays
     // codegen'd; a second scan of a columnar source beats an interpreted
-    // single scan.
-    val aliased = aggs.map { case (name, c) => c.as(name) }.toSeq
-    val collected: Map[String, Long] =
-      aliased.grouped(MaxAggsPerPass).flatMap { chunk =>
-        val row: Row = df.agg(chunk.head, chunk.tail: _*).head()
-        row.schema.fieldNames.map(f => f -> row.getAs[Long](row.fieldIndex(f)))
-      }.toMap
+    // single scan. The vocabulary samples ride the first chunk.
+    val chunks = aggs.toSeq.grouped(MaxAggsPerPass).toSeq
+    val sampleKeys = vocabFields.collect { case (f, vocabLower) if has(f) =>
+      f -> unrecognisedValue(f, vocabLower)
+    }
+    val (firstCounts, samples) = aggregateWithSamples(df, chunks.head, sampleKeys)
+    val collected: Map[String, Long] = firstCounts ++ chunks.tail.flatMap(plainCounts(df, _))
     def n(name: String): Long = collected(name)
 
     val recordCount = n("__n")
@@ -249,7 +251,7 @@ object Validator {
         val recognised = n(s"vocab__$f")
         val unrecognised = recordCount - (nulls + recognised)
         val nonMatching =
-          if (unrecognised > 0) vocabSample(df, f, vocabLower, nulls > 0) else Nil
+          if (unrecognised > 0) nonMatchingSample(samples(f), nulls > 0) else Nil
         VocabularyReport(f, has_field = true, recognised, unrecognised, nonMatching)
       }
     }
@@ -271,21 +273,77 @@ object Validator {
       vocab_reports = Some(vocabReports))
   }
 
+  /** Distinct unrecognised values fetched per vocabulary field: the
+    * reference's slice of 10 plus one, so the "nan" merge stays exact.
+    */
+  private val VocabSampleFetch = 11
+
+  /** A vocabulary field's value when it is present and unrecognised (E2
+    * lower + E3 membership, as A10 counts it), else null.
+    */
+  private def unrecognisedValue(field: String, vocabLower: Seq[String]): Column = {
+    val c = qcol(field).cast("string")
+    when(qcol(field).isNotNull && !lower(c).isin(vocabLower: _*), c)
+  }
+
+  /** The first aggregate chunk and the vocabulary samples in ONE job.
+    *
+    * Grouping sets built by hand: set 0 holds every row, grouped to one row
+    * of the fused aggregates; set i+1 holds a row only where vocabulary
+    * field i is present and unrecognised, grouped by that value. (Spark's
+    * GROUPING SETS would copy every row into every set, and with it the
+    * distinct-id aggregation state.) A `row_number()` per set, ordered by
+    * value, cuts each sample to [[VocabSampleFetch]] distinct values; the
+    * bound is below Spark's window group limit threshold, so the cut also
+    * runs before the window's shuffle. Returns the chunk's counts and each
+    * field's sorted distinct unrecognised values.
+    */
+  private def aggregateWithSamples(
+      df: DataFrame,
+      chunk: Seq[(String, Column)],
+      keys: Seq[(String, Column)]): (Map[String, Long], Map[String, Seq[String]]) = {
+    if (keys.isEmpty) (plainCounts(df, chunk), Map.empty)
+    else {
+      val aliased = chunk.map { case (n, c) => c.as(n) }
+      val sets = array((lit(null).cast("string") +: keys.map(_._2)).zipWithIndex.map {
+        case (k, i) => struct(lit(i).as("__set"), k.as("__key"))
+      }: _*)
+      val rows = df
+        .select(col("*"), inline(sets))
+        .filter(col("__set") === 0 || col("__key").isNotNull)
+        .groupBy("__set", "__key")
+        .agg(aliased.head, aliased.tail: _*)
+        .withColumn("__rn", row_number().over(Window.partitionBy("__set").orderBy("__key")))
+        .filter(col("__rn") <= VocabSampleFetch)
+        .collect()
+        .groupBy(_.getAs[Int]("__set"))
+      // no set-0 row on empty input, where every aggregate of
+      // buildAggregates (count/countDistinct) is 0
+      val all = rows.get(0).map(_.head)
+      val counts = chunk.map { case (n, _) => n -> all.fold(0L)(_.getAs[Long](n)) }.toMap
+      val samples = keys.zipWithIndex.map { case ((f, _), i) =>
+        f -> rows.getOrElse(i + 1, Array.empty[Row])
+          .sortBy(_.getAs[Int]("__rn")).map(_.getAs[String]("__key")).toSeq
+      }.toMap
+      (counts, samples)
+    }
+  }
+
+  /** One global aggregate of `chunk`'s (name, aggregate) pairs. */
+  private def plainCounts(df: DataFrame, chunk: Seq[(String, Column)]): Map[String, Long] = {
+    val aliased = chunk.map { case (n, c) => c.as(n) }
+    val row = df.agg(aliased.head, aliased.tail: _*).head()
+    chunk.map { case (n, _) => n -> row.getAs[Long](n) }.toMap
+  }
+
   /** A15 — bounded sample of unrecognised vocabulary values (reference:
     * validate.py:297-300): distinct, lexicographically sorted, first 10.
     * The reference stringifies pandas NaN to "nan", sorts it among the real
     * values, slices 10, then removes "nan" — replicated here driver-side by
     * merging a synthetic "nan" into the sorted sample when nulls exist
-    * (SURVEY.md T5; we fetch 11 real values so the slice stays exact).
-    * Plans as TakeOrderedAndProject — no unbounded collect at any scale.
+    * (SURVEY.md T5; `reals` holds 11 values so the slice stays exact).
     */
-  private def vocabSample(
-      df: DataFrame, field: String, vocabLower: Seq[String], hasNulls: Boolean): Seq[String] = {
-    val c = qcol(field).cast("string")
-    val reals = df
-      .filter(qcol(field).isNotNull && !lower(c).isin(vocabLower: _*))
-      .select(c.as("v")).distinct().orderBy("v").limit(11)
-      .collect().map(_.getString(0)).toSeq
+  private def nonMatchingSample(reals: Seq[String], hasNulls: Boolean): Seq[String] = {
     // distinct first: numpy unique collapses a literal "nan" string and
     // the NaN indicator into ONE entry; without it both would occupy
     // sample slots and filterNot would remove two
