@@ -1,6 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.Canaries
 object Bench {
+  /** One pass over `qs` in order, sampling `canary` before the first query,
+    * every `every` queries and after the last. Returns the queries that ran,
+    * each with its seconds and the worse (max) of the canaries at its
+    * window's start and end, the names of the queries that threw, and the
+    * raw samples. A failed query is named, never timed. Per-WINDOW
+    * attribution: a mid-run host-throttle window (observed: 6.8x canaries
+    * poisoning the sf10 bench line) is machine-attributable to the
+    * specific queries that ran inside it.
+    */
+  private[graft] def runPass(spark: SparkSession, sfDir: String,
+      qs: Seq[(String, (SparkSession, String) => DataFrame)], every: Int,
+      canary: () => Canaries.Canary)
+      : (Seq[(String, Double, Canaries.Canary)], Seq[String], Vector[Canaries.Canary]) = {
+    val timed = ArrayBuffer[(String, Double, Int)]()
+    val failed = ArrayBuffer[String]()
+    var canaries = Vector(canary())
+    qs.zipWithIndex.foreach { case ((name, fn), i) =>
+      if (i > 0 && i % every == 0) canaries :+= canary()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        timed += ((name, (System.nanoTime() - t0) / 1e9, i / every))
+      } catch { case _: Throwable => failed += name }
+    }
+    canaries :+= canary()
+    val out = timed.toSeq.map { case (name, sec, w) =>
+      val a = canaries(w)
+      val b = canaries(math.min(w + 1, canaries.size - 1))
+      (name, sec, Canaries.Canary(math.max(a.single, b.single),
+        math.max(a.par32, b.par32), math.max(a.mem, b.mem)))
+    }
+    (out, failed.toSeq, canaries)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -27,7 +63,6 @@ object Bench {
     // wall-clock under hard host throttling (single-thread canary moves);
     // identical runs 95s vs 921s with IDENTICAL single-thread calib under
     // a CPU quota (only the parallel canary moves).
-    import graft.tools.Canaries
     def calibrate(iters: Long = 300000000L): Double = Canaries.calibrate(iters)
     def calibratePar(threads: Int = 8, iters: Long = 300000000L): Double =
       Canaries.calibrateParBoth(threads, iters)._1
@@ -126,32 +161,6 @@ object Bench {
     type Canary = Canaries.Canary
     val Canary = Canaries.Canary
     def sampleCanary(): Canary = Canaries.sample()
-    // Per-WINDOW throttle attribution: canaries are interleaved every
-    // CanaryEvery queries, so a mid-run host-throttle window (observed:
-    // 6.8x canaries poisoning the sf10 bench line) is machine-attributable
-    // to the specific queries that ran inside it. Each query carries the
-    // worse (max) of the canaries at its window's start and end, from
-    // whichever pass supplied its min-of-N time.
-    def runPass(): (Seq[(String, Double, Canary)], Vector[Canary]) = {
-      val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-      val timed = scala.collection.mutable.ArrayBuffer[(String, Double, Int)]()
-      var canaries = Vector(sampleCanary())
-      qs.zipWithIndex.foreach { case ((name, fn), i) =>
-        if (i > 0 && i % CanaryEvery == 0) canaries :+= sampleCanary()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        timed += ((name, (System.nanoTime() - t0) / 1e9, i / CanaryEvery))
-      }
-      canaries :+= sampleCanary()
-      val out = timed.toSeq.map { case (name, sec, w) =>
-        val a = canaries(w)
-        val b = canaries(math.min(w + 1, canaries.size - 1))
-        (name, sec, Canary(math.max(a.single, b.single),
-          math.max(a.par32, b.par32), math.max(a.mem, b.mem)))
-      }
-      (out, canaries)
-    }
     val calib = calibrate()
     val calibPar = calibratePar()
     val calibStream = calibrateStream()
@@ -161,10 +170,18 @@ object Bench {
     // runs with clean start/end calibrations), and min-over-repetitions is
     // the standard way to read through external interference. All pass
     // totals are reported so the noise itself stays visible.
-    val (pass1full, rawCan1) = runPass()
+    val registered = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+    def pass() = runPass(spark, sfDir, registered, CanaryEvery, () => sampleCanary())
+    val (pass1ran, failed1, rawCan1) = pass()
     val calibMid = calibrate()
-    val (pass2full, rawCan2) =
-      if (passes == 2) runPass() else (pass1full, Vector.empty[Canary])
+    val (pass2ran, failed2, rawCan2) =
+      if (passes == 2) pass() else (pass1ran, Nil, Vector.empty[Canary])
+    // A query that threw in either pass is listed in "failed" and left out
+    // of every total, so both passes sum the same queries.
+    val failed = (failed1 ++ failed2).distinct.sorted
+    val pass1full = pass1ran.filterNot(q => failed.contains(q._1))
+    val pass2full = pass2ran.filterNot(q => failed.contains(q._1))
     val pass1 = pass1full.map { case (k, v, _) => k -> v }
     val pass2 = pass2full.map { case (k, v, _) => k -> v }
     val p2 = pass2full.map { case (k, v, c) => k -> (v, c) }.toMap
@@ -267,7 +284,8 @@ object Bench {
     val memNearJson = calibNear.map { case (k, c) =>
       s"\"" + k + "\":" + r3(c.mem) }.mkString("{", ",", "}")
     val throttledJson = throttledQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$families,"sf":"$sfDir","passes":$passes,"agg":"min","value_single_pass":${pass1.map(_._2).sum},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => p.map(_._2).sum).mkString(",")}],"calib_sec":$calib,"calib_mid_sec":$calibMid,"calib_end_sec":$calibEnd,"calib_par8_sec":$calibPar,"calib_par32_sec":$calibPar32,"calib_par8_end_sec":$calibParEnd,"calib_stream_sec":$calibStream,"calib_stream_end_sec":$calibStreamEnd,"calib_near":$calibNearJson,"calib_par32_near":$par32NearJson,"calib_mem_near":$memNearJson,"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"throttled_queries":$throttledJson}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$families,"sf":"$sfDir","passes":$passes,"agg":"min","value_single_pass":${pass1.map(_._2).sum},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => p.map(_._2).sum).mkString(",")}],"calib_sec":$calib,"calib_mid_sec":$calibMid,"calib_end_sec":$calibEnd,"calib_par8_sec":$calibPar,"calib_par32_sec":$calibPar32,"calib_par8_end_sec":$calibParEnd,"calib_stream_sec":$calibStream,"calib_stream_end_sec":$calibStreamEnd,"calib_near":$calibNearJson,"calib_par32_near":$par32NearJson,"calib_mem_near":$memNearJson,"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"throttled_queries":$throttledJson,"failed":$failedJson}"""
     println(json)
     // The harness that snapshots this run keeps only the LAST ~2000 chars of
     // output, and sbt appends its own "[success] ..." trailer — with 280
@@ -281,7 +299,7 @@ object Bench {
     val legendLine = s"""{"bench_legend":$legend}"""
     val compactQs = results.zipWithIndex
       .map { case ((_, v), i) => s"\"q$i\":${r3(v)}" }.mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$compactQs,"sf":"${new java.io.File(sfDir).getName}","n_queries":${results.size},"passes":$passes,"agg":"min","value_single_pass":${r3(pass1.map(_._2).sum)},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => r3(p.map(_._2).sum)).mkString(",")}],"calib_sec":[${r3(calib)},${r3(calibMid)},${r3(calibEnd)}],"calib_par_sec":[${r3(calibPar)},${r3(calibPar32)},${r3(calibParEnd)}],"calib_stream_sec":[${r3(calibStream)},${r3(calibStreamEnd)}],"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"n_throttled":${throttledQs.size},"query_names":"see bench_legend line / bench_out.json"}"""
+    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$compactQs,"sf":"${new java.io.File(sfDir).getName}","n_queries":${results.size},"passes":$passes,"agg":"min","value_single_pass":${r3(pass1.map(_._2).sum)},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => r3(p.map(_._2).sum)).mkString(",")}],"calib_sec":[${r3(calib)},${r3(calibMid)},${r3(calibEnd)}],"calib_par_sec":[${r3(calibPar)},${r3(calibPar32)},${r3(calibParEnd)}],"calib_stream_sec":[${r3(calibStream)},${r3(calibStreamEnd)}],"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"n_throttled":${throttledQs.size},"failed":$failedJson,"query_names":"see bench_legend line / bench_out.json"}"""
     // Belt-and-braces: sbt may prefix stdout lines, so also drop the JSON
     // where the driver (or a human) can read it unmangled.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")

@@ -184,7 +184,7 @@ object DwcaArchive {
     }
   }
 
-  private[dwca] def deleteTree(dir: File): Unit =
+  private[graft] def deleteTree(dir: File): Unit =
     if (dir.exists())
       Files.walk(dir.toPath)
         .sorted(java.util.Comparator.reverseOrder[Path]())

@@ -1,16 +1,87 @@
 package graft.ops
 
+import java.io.File
+import java.nio.file.Files
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver's synthetic testdata
-  * (`/root/testdata/sf*`, see TESTDATA.md). All registered queries read
-  * through here so the scan always carries an explicit schema-pruning
-  * projection from Catalyst (column pruning reaches the parquet reader).
+  * (`/root/testdata/sf*`, see TESTDATA.md). Every registered query reads
+  * the testdata tables through here (batch reads via [[table]], file-stream
+  * reads via [[schemaOf]]); the artifacts a query writes and reads back
+  * itself (`Dedup`, `Graph`, `Multimodal`, `ScaleOps`, the stream sinks)
+  * are read directly. Reads carry a known schema, so construction fires no
+  * Spark job, and the scan keeps Catalyst's schema-pruning projection
+  * (column pruning reaches the parquet reader).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** One leaf file of a table as the schema memo sees it: a file rewritten
+    * in place changes size or mtime, one replaced by a rename changes its
+    * `fileKey` (the inode on Linux).
+    */
+  private final case class LeafFile(path: String, size: Long, modified: FileTime, key: AnyRef)
+
+  private final case class SchemaKey(path: String, parquetConfs: Map[String, String])
+
+  /** Inferred schemas per session, held weakly: a dropped session takes its
+    * entries with it. Each (path, confs) keeps the leaf files it was
+    * inferred from; a mismatch re-infers and replaces the entry.
+    */
+  private val schemaMemo = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, (Vector[LeafFile], StructType)]]())
+
+  private def leafFiles(path: String): Vector[LeafFile] = {
+    val root = new File(path).getAbsoluteFile.toPath
+    if (!Files.exists(root)) Vector.empty
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.flatMap { p =>
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        if (a.isRegularFile) Some(LeafFile(p.toString, a.size(), a.lastModifiedTime(), a.fileKey()))
+        else None
+      }.toVector.sortBy(_.path)
+      finally walk.close()
+    }
+  }
+
+  /** The schema `spark.read.parquet(path).schema` infers, inferred once per
+    * session and reused while the table's leaf files (size, mtime, file
+    * key) and the session's explicitly set `spark.sql.parquet.*` /
+    * `spark.sql.legacy.parquet.*` confs are unchanged: the confs change
+    * what inference yields (`nanosAsLong` turns `TIMESTAMP(NANOS)` into
+    * BIGINT). Inference is one Spark job per call; a memoised schema costs
+    * a stat per leaf file. Only metadata is kept, never a `DataFrame`, so
+    * each read still lists the files afresh. A missing, empty or non-local
+    * path is inferred every time, so it fails exactly as a plain read does.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val files = leafFiles(path)
+    if (files.isEmpty) spark.read.parquet(path).schema
+    else {
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val key = SchemaKey(new File(path).getAbsolutePath, confs)
+      val memo = schemaMemo.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+      Option(memo.get(key)).collect { case (seen, schema) if seen == files => schema }
+        .getOrElse {
+          val schema = spark.read.parquet(path).schema
+          memo.put(key, (files, schema))
+          schema
+        }
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -45,14 +116,14 @@ object Tables {
     case _ => df.withColumn("ts", col("ts").cast("timestamp"))
   }
 
-  /** File-stream twin of [[events]]: schema from a batch read (the stream
+  /** File-stream twin of [[events]]: schema from [[schemaOf]] (the stream
     * source requires an explicit schema), ts normalized identically. The
     * glob narrows the SF dir to the events file (a bare file path fails
     * the stream source's basePath validation).
     */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = schemaOf(s, s"$d/events.parquet")
     fixEventsTs(s.readStream.schema(schema).parquet(s"$d/events*.parquet"))
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
@@ -64,14 +135,15 @@ object Tables {
     */
   def viewSuffix(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** Per-PROCESS scratch root under /tmp/graft_sink, deleted by a JVM
-    * shutdown hook: the PID suffix only has to span concurrently-running
+  /** Per-PROCESS scratch root under `java.io.tmpdir`/graft_sink, deleted by
+    * a JVM shutdown hook: the PID suffix only has to span concurrently-running
     * processes (Verify alongside Bench on the same SF is a normal local
     * workflow), so tying the directory's lifetime to the process keeps
     * repeated runs from accumulating orphaned sink trees.
     */
   private lazy val processScratchRoot: String = {
-    val p = s"/tmp/graft_sink/pid_${java.lang.ProcessHandle.current().pid()}"
+    val p = new File(System.getProperty("java.io.tmpdir"),
+      s"graft_sink/pid_${java.lang.ProcessHandle.current().pid()}").getPath
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       val f = new java.io.File(p)
       if (f.exists()) {

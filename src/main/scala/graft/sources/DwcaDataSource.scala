@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.io.File
+import java.nio.file.Files
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -48,8 +50,8 @@ import graft.dwca.{DwcaArchive, MetaXml, TableDescriptor}
   * (multi-char separators, quote handling) forbids naive mid-file byte
   * splits. Zip archives extract on the driver through the same
   * size-capped [[DwcaArchive.extractZip]] as the classic reader (memoized
-  * per path — inferSchema and getTable share one extraction); at 100 TB
-  * the archive lives pre-extracted on distributed storage and every
+  * per unchanged zip — inferSchema and getTable share one extraction); at
+  * 100 TB the archive lives pre-extracted on distributed storage and every
   * partition reads its file from there.
   */
 class DwcaDataSource extends TableProvider with DataSourceRegister {
@@ -70,11 +72,30 @@ class DwcaDataSource extends TableProvider with DataSourceRegister {
 
 object DwcaDataSource {
 
-  /** One driver-side extraction per zip path, shared by the
-    * inferSchema/getTable double-call (and any re-read of the same
-    * archive in the session's lifetime).
+  /** A zip's driver-side extraction, shared by the inferSchema/getTable
+    * double-call and by every later read of the same zip while it stays
+    * unchanged (size and mtime) and its extraction still holds a
+    * `meta.xml`. A changed zip replaces its entry and the old extraction
+    * is deleted; an extraction that vanished (a temp-dir cleaner) is
+    * extracted again.
     */
-  private val extractedZips = TrieMap.empty[String, File]
+  private final case class Extraction(size: Long, modified: FileTime, dir: File)
+
+  private val extractedZips = mutable.Map.empty[String, Extraction]
+
+  private def extraction(zip: File): File = extractedZips.synchronized {
+    val path = zip.getAbsolutePath
+    val attrs = Files.readAttributes(zip.toPath, classOf[BasicFileAttributes])
+    extractedZips.get(path) match {
+      case Some(e) if e.size == attrs.size && e.modified == attrs.lastModifiedTime &&
+          new File(e.dir, "meta.xml").isFile => e.dir
+      case stale =>
+        stale.foreach(e => DwcaArchive.deleteTree(e.dir))
+        val dir = DwcaArchive.extractZip(zip)
+        extractedZips(path) = Extraction(attrs.size, attrs.lastModifiedTime, dir)
+        dir
+    }
+  }
 
   private[sources] def resolve(options: CaseInsensitiveStringMap): (TableDescriptor, File) = {
     val path = Option(options.get("path")).getOrElse(
@@ -82,7 +103,7 @@ object DwcaDataSource {
     val f = new File(path)
     val dir =
       if (f.isDirectory) f
-      else if (f.isFile) extractedZips.getOrElseUpdate(f.getAbsolutePath, DwcaArchive.extractZip(f))
+      else if (f.isFile) extraction(f)
       else throw new IllegalArgumentException(s"archive not found: $path")
     val meta = new File(dir, "meta.xml")
     if (!meta.isFile)

@@ -818,7 +818,7 @@ object EventStreams {
       """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
         |  min(doc_id) AS keeper
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = graft.ops.Tables.schemaOf(s, s"$d/documents.parquet")
       val raw = s.readStream.schema(schema).parquet(s"$d/documents*.parquet")
       val deduped = raw
         .select(col("doc_id"),
@@ -949,7 +949,7 @@ object EventStreams {
       """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
         |  min(doc_id) AS keeper
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = graft.ops.Tables.schemaOf(s, s"$d/documents.parquet")
       val raw = s.readStream.schema(schema).parquet(s"$d/documents*.parquet")
       val deduped = raw
         .select(col("doc_id"),
