@@ -5,7 +5,6 @@ import java.nio.file.{Files, Path}
 import java.util.zip.ZipFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, when}
 
 import scala.jdk.CollectionConverters._
 
@@ -14,15 +13,16 @@ import scala.jdk.CollectionConverters._
   * reference's `DwCAReader`/`pd_read` usage (dwc_validator/validate_dwca.py:27-28,
   * :81-82).
   *
-  * Design notes for scale: the archive text files are read by Spark's
-  * distributed CSV source (splittable for uncompressed files), *not*
-  * materialized on the driver. All columns are read as strings
-  * (`inferSchema=false`), matching the reference's `parse_dates=False`
-  * lenient-typing model; typed interpretation happens per-check via
-  * `try_cast` (SURVEY.md §1.2). Zip archives are extracted to a temp dir on
-  * the driver first — Spark cannot read inside zips; for 100 TB-scale
-  * archives the expectation is extracted files on distributed storage.
-  * `close()` deletes that extraction once the frames' actions are done.
+  * Design notes for scale: the archive text files are read by the `dwca`
+  * DataSourceV2 source, which splits an unquoted newline-terminated file
+  * into byte ranges, so a large core parses on every core and is never
+  * materialized on the driver. All columns are read as strings, matching
+  * the reference's `parse_dates=False` lenient-typing model; typed
+  * interpretation happens per-check via `try_cast` (SURVEY.md §1.2). Zip
+  * archives are extracted to a temp dir on the driver first — Spark cannot
+  * read inside zips; for 100 TB-scale archives the expectation is extracted
+  * files on distributed storage. `close()` deletes that extraction once the
+  * frames' actions are done.
   */
 final class DwcaArchive private (
     val spark: SparkSession,
@@ -47,89 +47,15 @@ final class DwcaArchive private (
   def joined(ext: TableDescriptor): DataFrame =
     DwcaArchive.starJoin(coreDataFrame, read(ext), ext.rowTypeLocalName)
 
-  /** Read one table of the archive per its declared dialect, naming columns
-    * positionally after the DwC term local names (id/coreid per SURVEY.md T4).
+  /** Read one table of the archive through the `dwca` source
+    * ([[graft.sources.DwcaDataSource]]), the one parser of the meta.xml
+    * dialect: columns are the declared terms named positionally (id/coreid
+    * per SURVEY.md T4) plus the default-only fields, all strings, with
+    * pandas' NA tokens read as null.
     */
   def read(table: TableDescriptor): DataFrame = {
-    val d = table.dialect
-    val path = new File(rootDir, table.location).getAbsolutePath
-    var reader = spark.read
-      .option("sep", d.fieldsTerminatedBy)
-      .option("encoding", d.encoding)
-      // pandas reads empty CSV fields as NaN; pin Spark's equivalent (null).
-      .option("nullValue", "")
-      // Empty quote string disables quote handling (the DwCA default,
-      // fieldsEnclosedBy="").
-      .option("quote", d.fieldsEnclosedBy)
-      .option("mode", "PERMISSIVE")
-      .option("inferSchema", "false")
-    // lineSep handling: unset, Spark's CSV parser covers \n, \r\n and \r
-    // uniformly (both fixture dialects). A declared single-char custom
-    // terminator is honored; anything else must fail LOUDLY — silently
-    // newline-splitting a differently-terminated file would corrupt every
-    // downstream count.
-    d.linesTerminatedBy match {
-      case "" | "\n" | "\r\n" | "\r" => ()
-      case sep if sep.length == 1 => reader = reader.option("lineSep", sep)
-      case sep => throw new IllegalArgumentException(
-        s"unsupported linesTerminatedBy ${sep.map(c => f"\\u${c.toInt}%04x").mkString}: " +
-          "Spark's CSV source supports \\n/\\r\\n/\\r or a single custom character")
-    }
-    // ignoreHeaderLines: the header option skips exactly ONE line; the
-    // reference (pandas skiprows=N) skips N. For N > 1 pre-skip the extra
-    // lines on the ordered single-file read, then parse the remainder.
-    val raw =
-      if (d.ignoreHeaderLines <= 1) reader.option("header", d.ignoreHeaderLines > 0).csv(path)
-      else {
-        // The pre-skip reads lines with spark.read.textFile, which always
-        // splits on \n/\r\n and decodes UTF-8 — a custom single-char
-        // terminator or non-UTF-8 encoding would be silently ignored here
-        // (mis-splitting every row) even though the CSV parse honors them.
-        // Same policy as the multi-char terminator case: fail LOUDLY on the
-        // combination instead of corrupting downstream counts.
-        d.linesTerminatedBy match {
-          case "" | "\n" | "\r\n" | "\r" => ()
-          case sep => throw new IllegalArgumentException(
-            s"ignoreHeaderLines=${d.ignoreHeaderLines} > 1 cannot be combined with custom " +
-              s"linesTerminatedBy ${sep.map(c => f"\\u${c.toInt}%04x").mkString}: the line " +
-              "pre-skip splits on newlines only")
-        }
-        if (!Set("utf-8", "utf8", "us-ascii", "ascii")
-            .contains(d.encoding.toLowerCase(java.util.Locale.ROOT)))
-          throw new IllegalArgumentException(
-            s"ignoreHeaderLines=${d.ignoreHeaderLines} > 1 cannot be combined with encoding " +
-              s"${d.encoding}: the line pre-skip decodes UTF-8 only")
-        import spark.implicits._
-        val lines = spark.read.textFile(path).rdd
-          .zipWithIndex()
-          .filter(_._2 >= d.ignoreHeaderLines - 1) // header option eats one more
-          .map(_._1)
-        reader.option("header", true).csv(spark.createDataset(lines))
-      }
-    val names = table.columnNames
-    // Tolerate files with fewer/more physical columns than declared.
-    val renamed = raw.toDF(raw.columns.indices.map { i =>
-      if (i < names.length) names(i) else s"_c$i"
-    }: _*)
-    // pandas' default NA tokens (keep_default_na=True in the reference's
-    // pd_read) all parse to NaN, not just the empty string Spark's
-    // nullValue covers — normalize them to null so presence counts, id
-    // checks, and vocab nulls match the reference on archives containing
-    // literal "NA"/"NULL"/"NaN"/… values.
-    //
-    // One projection for the whole table: a per-column withColumn fold
-    // re-analyses the growing plan once per column, which dominates a
-    // 190-column archive's read.
-    val naNormalized = renamed.columns.toSeq.map { c =>
-      when(col(s"`$c`").isin(DwcaArchive.PandasNaTokens: _*), lit(null))
-        .otherwise(col(s"`$c`")).as(c)
-    }
-    // meta.xml <field term=… default=…/> with no index → constant column.
-    val defaults = table.defaultOnlyFields
-      .filterNot(f => renamed.columns.contains(f.localName))
-      .distinctBy(_.localName)
-      .map(f => lit(f.default.orNull).as(f.localName))
-    renamed.select(naNormalized ++ defaults: _*)
+    val reader = spark.read.format("dwca").option("path", rootDir.getAbsolutePath)
+    (if (table.isCore) reader else reader.option("table", table.rowType)).load()
   }
 
   /** Deletes the directory a zip was extracted to (no-op for a directory
@@ -142,9 +68,8 @@ object DwcaArchive {
 
   /** The DwCA star join on core `id` = extension `coreid`, extension
     * columns prefixed `<extRowTypeLocalName>_` — ONE definition shared by
-    * [[DwcaArchive.joined]] (classic reader frames) and the DSv2-provider
-    * path (`q_s2` builds the same join over `format("dwca")` frames), so
-    * the two ingestion shapes can never drift. At scale this is a plain
+    * [[DwcaArchive.joined]] and `q_s2`, which builds the same join over
+    * frames it loads with `format("dwca")` itself. At scale this is a plain
     * shuffled equi-join on the id key (or broadcast when the extension is
     * small) — exactly what Catalyst picks.
     */
@@ -157,7 +82,7 @@ object DwcaArchive {
 
   /** pandas' default NA token set (`pandas.io.parsers`, keep_default_na) —
     * the reference's `pd_read` treats every one of these as NaN; the
-    * reader normalizes them to null for count/id/vocab parity.
+    * `dwca` source reads them as null for count/id/vocab parity.
     */
   val PandasNaTokens: Seq[String] = Seq(
     "#N/A", "#N/A N/A", "#NA", "-1.#IND", "-1.#QNAN", "-NaN", "-nan",
@@ -201,8 +126,9 @@ object DwcaArchive {
   val MaxExtractBytes: Long = 8L << 30
 
   private[graft] def extractZip(zip: File, maxBytes: Long = MaxExtractBytes): File = {
+    // the caller owns the directory's lifetime (DwcaArchive.close, or the
+    // dwca source's exit hook): deleteOnExit cannot remove a non-empty one
     val tmp = Files.createTempDirectory("dwca-").toFile
-    tmp.deleteOnExit()
     val zf = new ZipFile(zip)
     var extracted = 0L
     var ok = false
@@ -238,8 +164,8 @@ object DwcaArchive {
       ok = true
     } finally {
       zf.close()
-      // deleteOnExit is a no-op on a non-empty dir: a failed extraction
-      // (cap breach, bad entry) must not leave partial gigabytes behind
+      // a failed extraction (cap breach, bad entry) must not leave partial
+      // gigabytes behind
       if (!ok) deleteTree(tmp)
     }
     tmp

@@ -42,9 +42,8 @@ object ArchiveQueries {
     // S1 + S5 — core read with meta.xml dialect: all columns arrive as
     // strings named by DwC term local names; row order pinned by id.
     // Reads THROUGH the DSv2 provider (format("dwca")) — the catalog-table
-    // ingestion shape with column pruning pushed to the scan; parity of
-    // the provider against the classic DwcaArchive.read is pinned by
-    // ArchiveParitySpec.
+    // ingestion shape with column pruning pushed to the scan, and the one
+    // dialect reader DwcaArchive.read (so the validator) loads through too.
     GraftQuery.of("q_s1_archive_core_read",
       s"""SELECT id, occurrenceID, scientificName, decimalLatitude,
          |  decimalLongitude, eventDate, recordedBy, geodeticDatum, basisOfRecord
@@ -57,7 +56,7 @@ object ArchiveQueries {
     // S2 — extension read + the core ⋈ extension star join on id = coreid
     // (extension columns arrive prefixed with the extension row type).
     // Both sides mount via the DSv2 provider; the join is the SAME
-    // DwcaArchive.starJoin the classic path uses.
+    // DwcaArchive.starJoin that DwcaArchive.joined uses.
     GraftQuery.of("q_s2_archive_join",
       s"""SELECT c.id, c.eventID, c.eventDate, e.coreid,
          |  e.occurrenceStatus AS occurrence_occurrenceStatus,

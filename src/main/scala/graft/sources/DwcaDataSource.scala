@@ -1,23 +1,27 @@
 package graft.sources
 
-import java.io.File
+import java.io.{BufferedInputStream, File, FileInputStream, InputStream}
+import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.Files
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util
 
 import scala.collection.mutable
+import scala.util.Try
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull, IsNull, StringStartsWith}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.dwca.{DwcaArchive, MetaXml, TableDescriptor}
+import graft.dwca.{CsvDialect, DwcaArchive, MetaXml, TableDescriptor}
 
 /** DataSourceV2 `TableProvider` for Darwin Core Archives — the production
   * ingestion shape of the reference's whole-library entry point
@@ -38,21 +42,25 @@ import graft.dwca.{DwcaArchive, MetaXml, TableDescriptor}
   * In / IsNull / IsNotNull / StringStartsWith — and drops non-matching
   * rows inside the reader (a filter column pruned from the output is still
   * parsed for the decision); everything else returns as a residual for the
-  * post-scan Filter. Semantics (dialect options, positional term naming,
-  * pandas NA-token normalization, default-only constant fields) are
-  * identical to [[graft.dwca.DwcaArchive.read]], which ArchiveParitySpec
-  * pins against the reference fixtures; q_s1/q_s2 run THROUGH this
-  * provider so the DSv2 path is oracle-hashed end to end.
+  * post-scan Filter. This is the engine's one reader of the meta.xml
+  * dialect (positional term naming, pandas NA-token normalization,
+  * default-only constant fields): [[graft.dwca.DwcaArchive.read]] loads
+  * through it, so the validator, q_s1/q_s2 and ArchiveParitySpec's
+  * reference fixtures all exercise the same parse.
   *
   * Scale notes: meta.xml parses once on the driver (it IS the catalog
-  * metadata); each data file is one input partition — DwCA cores are
-  * single delimited files, and correctness under custom dialects
-  * (multi-char separators, quote handling) forbids naive mid-file byte
-  * splits. Zip archives extract on the driver through the same
-  * size-capped [[DwcaArchive.extractZip]] as the classic reader (memoized
-  * per unchanged zip — inferSchema and getTable share one extraction); at
-  * 100 TB the archive lives pre-extracted on distributed storage and every
-  * partition reads its file from there.
+  * metadata), which also refuses a dialect the reader cannot parse, naming
+  * the data file, before any job. A file whose dialect keeps every record
+  * on one line — no `fieldsEnclosedBy`, `\n` or `\r\n` terminators, an
+  * encoding in which byte 0x0A is always a newline — is split into byte
+  * ranges by Spark's file-split rule (`spark.sql.files.maxPartitionBytes`,
+  * `openCostInBytes`, default parallelism); each range reads the lines that
+  * start inside it. Any other dialect (quoted fields may hold newlines) is
+  * one input partition per file. Zip archives extract on the driver through
+  * the size-capped [[DwcaArchive.extractZip]] (memoized per unchanged zip —
+  * inferSchema and getTable share one extraction — and deleted at JVM
+  * exit); at 100 TB the archive lives pre-extracted on distributed storage
+  * and every partition reads its file from there.
   */
 class DwcaDataSource extends TableProvider with DataSourceRegister {
 
@@ -82,6 +90,12 @@ object DwcaDataSource {
   private final case class Extraction(size: Long, modified: FileTime, dir: File)
 
   private val extractedZips = mutable.Map.empty[String, Extraction]
+
+  // One hook deletes every extraction still memoized when the JVM exits:
+  // extractZip's directories are non-empty, which deleteOnExit cannot remove.
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    extractedZips.synchronized(
+      extractedZips.values.foreach(e => Try(DwcaArchive.deleteTree(e.dir))))))
 
   private def extraction(zip: File): File = extractedZips.synchronized {
     val path = zip.getAbsolutePath
@@ -117,12 +131,27 @@ object DwcaDataSource {
         .getOrElse(throw new IllegalArgumentException(
           s"archive has no extension '$which'; available: " +
             desc.extensions.map(_.rowTypeLocalName).mkString(", ")))
+    checkDialect(td.dialect, s"archive $path, data file ${td.location}")
     (td, dir)
   }
 
+  /** Refuses, on the driver, a dialect [[DwcaPartitionReader]] cannot parse:
+    * a line terminator other than one character or `\r\n`, and an encoding
+    * this JVM does not know. `where` names the archive and the data file.
+    */
+  private def checkDialect(d: CsvDialect, where: String): Unit = {
+    if (d.linesTerminatedBy.length > 1 && d.linesTerminatedBy != "\r\n")
+      throw new IllegalArgumentException(s"$where: unsupported linesTerminatedBy " +
+        s"${d.linesTerminatedBy.map(c => f"\\u${c.toInt}%04x").mkString}: one character or \\r\\n only")
+    if (!Try(Charset.isSupported(d.encoding)).getOrElse(false))
+      throw new IllegalArgumentException(s"$where: unsupported encoding '${d.encoding}'")
+  }
+
   /** All-string schema: positional term names plus default-only constant
-    * fields — the lenient-typing model of the classic reader (typed
-    * interpretation stays per-check via try_cast).
+    * fields — the reference's lenient-typing model (typed interpretation
+    * stays per-check via try_cast). A data file narrower than meta.xml
+    * reads its missing terms as null; columns past the declared ones are
+    * not read.
     */
   private[sources] def schemaFor(td: TableDescriptor): StructType = {
     val positional = td.columnNames
@@ -160,8 +189,8 @@ final class DwcaScanBuilder(td: TableDescriptor, dataFile: String, full: StructT
     * bare count answers INSIDE the reader — the CSV scan advances records
     * (and decides any pushed row filters) without materializing a single
     * column value, and ships back ONE long. Complete pushdown is sound
-    * here because the archive scan is a single input partition (dialect
-    * correctness forbids mid-file splits), so the partition-local count
+    * here because [[DwcaCountScan]] reads the file as one input partition
+    * (unlike [[DwcaScan]], it never splits), so the partition-local count
     * IS the final answer. Anything grouped, or any other aggregate,
     * declines — Spark keeps its own aggregation over the normal scan.
     */
@@ -181,8 +210,8 @@ final class DwcaScanBuilder(td: TableDescriptor, dataFile: String, full: StructT
     * decide (EqualTo / In / IsNull / IsNotNull / StringStartsWith over a
     * declared field); everything else stays a post-scan residual. Accepted
     * filters are evaluated against the PARSED value (post NA-token
-    * normalization), so `IsNull` matches pandas-NA tokens exactly as the
-    * classic reader's frame would — the parity the spec pins.
+    * normalization), so `IsNull` matches pandas-NA tokens exactly as a
+    * post-scan filter over the unfiltered frame would.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val known = full.fieldNames.toSet
@@ -203,7 +232,7 @@ final class DwcaScanBuilder(td: TableDescriptor, dataFile: String, full: StructT
 
   override def build(): Scan =
     if (countStar) new DwcaCountScan(td, dataFile, pushed)
-    else new DwcaScan(td, dataFile, required, pushed)
+    else new DwcaScan(td, dataFile, required, pushed, SparkSession.active)
 }
 
 /** Scan for a completely-pushed ungrouped COUNT(*): one partition, one
@@ -234,17 +263,17 @@ final class DwcaCountReaderFactory(td: TableDescriptor, pushed: Array[Filter])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DwcaCountReader(partition.asInstanceOf[DwcaFilePartition].path, td, pushed)
+    new DwcaCountReader(partition.asInstanceOf[DwcaFilePartition], td, pushed)
 }
 
 /** Drives the ordinary partition reader with an EMPTY projection (filter
   * columns still parse for the row decision — see [[DwcaPartitionReader]])
   * and reduces it to the single count row.
   */
-final class DwcaCountReader(path: String, td: TableDescriptor, pushed: Array[Filter])
+final class DwcaCountReader(part: DwcaFilePartition, td: TableDescriptor, pushed: Array[Filter])
     extends PartitionReader[InternalRow] {
 
-  private val inner = new DwcaPartitionReader(path, td, new StructType(), pushed)
+  private val inner = new DwcaPartitionReader(part, td, new StructType(), pushed)
   private var emitted = false
   private var count = 0L
 
@@ -261,16 +290,32 @@ final class DwcaCountReader(path: String, td: TableDescriptor, pushed: Array[Fil
   override def close(): Unit = inner.close()
 }
 
+/** `session` is the one the scan was built in: its file-split confs size
+  * the byte ranges.
+  */
 final class DwcaScan(td: TableDescriptor, dataFile: String, required: StructType,
-    pushed: Array[Filter])
+    pushed: Array[Filter], session: SparkSession)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
 
   override def toBatch: Batch = this
 
+  /** One partition per file, or — when [[DwcaScan.splittable]] — byte
+    * ranges of Spark's file-split size over the bytes after the header
+    * lines, which the driver finds here so that no range skips a row.
+    */
   override def planInputPartitions(): Array[InputPartition] =
-    Array(DwcaFilePartition(dataFile))
+    if (!DwcaScan.splittable(td.dialect)) Array(DwcaFilePartition(dataFile))
+    else {
+      val length = new File(dataFile).length
+      val first = DwcaScan.headerEnd(dataFile, td.dialect.ignoreHeaderLines)
+      val openCost = session.sessionState.conf.filesOpenCostInBytes
+      val split = FilePartition.maxSplitBytes(session, length + openCost)
+      val starts = first until length by split
+      (if (starts.isEmpty) Seq(first) else starts)
+        .map(s => DwcaFilePartition(dataFile, s, math.min(s + split, length))).toArray
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DwcaReaderFactory(td, required, pushed)
@@ -280,24 +325,123 @@ final class DwcaScan(td: TableDescriptor, dataFile: String, required: StructType
       s"PushedFilters: [${pushed.mkString(", ")}]"
 }
 
-final case class DwcaFilePartition(path: String) extends InputPartition
+object DwcaScan {
+
+  /** The dialects whose records are exactly the file's `\n`-ended lines,
+    * found by byte: unquoted (a quoted field may hold a newline), `\n` or
+    * `\r\n` terminators, and an encoding in which byte 0x0A is only ever
+    * a newline.
+    */
+  private[sources] def splittable(d: CsvDialect): Boolean =
+    d.fieldsEnclosedBy.isEmpty && (d.linesTerminatedBy == "\n" || d.linesTerminatedBy == "\r\n") &&
+      Set(StandardCharsets.UTF_8, StandardCharsets.US_ASCII, StandardCharsets.ISO_8859_1)
+        .contains(Charset.forName(d.encoding))
+
+  /** Offset just past the first `lines` newlines of `path` (its length if
+    * it has fewer).
+    */
+  private[sources] def headerEnd(path: String, lines: Int): Long = {
+    val in = new BufferedInputStream(new FileInputStream(path))
+    try {
+      var offset, seen = 0L
+      var b = 0
+      while (seen < lines && { b = in.read(); b >= 0 }) {
+        offset += 1
+        if (b == '\n') seen += 1
+      }
+      offset
+    } finally in.close()
+  }
+}
+
+/** Bytes `[start, end)` of a data file, read as the lines that start inside
+  * them; `end < 0` is the whole file, whose reader also skips the header
+  * lines.
+  */
+final case class DwcaFilePartition(path: String, start: Long = 0L, end: Long = -1L)
+    extends InputPartition {
+  def whole: Boolean = end < 0
+}
+
+/** The bytes of the lines that start in `[start, end)` of `path`: the line
+  * running into `start` is the previous range's, and the line running past
+  * `end` is read through its `\n`. Sound only where byte 0x0A always ends
+  * a record ([[DwcaScan.splittable]]).
+  */
+private[sources] final class LineRangeInputStream(path: String, start: Long, end: Long)
+    extends InputStream {
+
+  private val in = {
+    val file = new FileInputStream(path)
+    // from the byte before start: a line starts at start only if that
+    // byte is a newline
+    if (start > 0) file.getChannel.position(start - 1)
+    new BufferedInputStream(file, 1 << 16)
+  }
+  private var pos = math.max(start - 1, 0L) // file offset of in's next byte
+  private var done = false
+
+  private def nextByte(): Int = {
+    val b = in.read()
+    if (b >= 0) pos += 1
+    b
+  }
+
+  if (start > 0) {
+    var b = nextByte()
+    while (b >= 0 && b != '\n') b = nextByte()
+  }
+  done = pos >= end
+
+  override def read(): Int =
+    if (done) -1
+    else {
+      val b = nextByte()
+      if (b < 0 || (b == '\n' && pos >= end)) done = true
+      b
+    }
+
+  override def read(buf: Array[Byte], off: Int, len: Int): Int =
+    if (done) -1
+    else if (len == 0) 0
+    else if (pos < end) {
+      val n = in.read(buf, off, math.min(len.toLong, end - pos).toInt)
+      if (n < 0) { done = true; -1 }
+      else {
+        pos += n
+        if (pos >= end && buf(off + n - 1) == '\n') done = true
+        n
+      }
+    } else {
+      // past end: the rest of the last line, through its newline
+      var n = 0
+      var b = 0
+      while (n < len && { b = read(); b >= 0 }) { buf(off + n) = b.toByte; n += 1 }
+      if (n == 0) -1 else n
+    }
+
+  // Nonzero while bytes remain, as a file's: a decoding reader then fills
+  // the parser's first buffer past one chunk, so univocity detects the line
+  // separator from whole lines, not from a chunk that ends mid-line.
+  override def available(): Int = if (done) 0 else in.available()
+
+  override def close(): Unit = in.close()
+}
 
 final class DwcaReaderFactory(td: TableDescriptor, required: StructType,
     pushed: Array[Filter])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DwcaPartitionReader(partition.asInstanceOf[DwcaFilePartition].path, td, required,
-      pushed)
+    new DwcaPartitionReader(partition.asInstanceOf[DwcaFilePartition], td, required, pushed)
 }
 
 /** Per-partition univocity CSV parse honoring the meta.xml dialect, with
   * the pruned column index set pushed into the parser (`selectIndexes`) so
-  * unused columns never materialize. The unsupported dialect combinations
-  * fail LOUDLY with the same policy as the classic reader (silently
-  * mis-splitting rows would corrupt every downstream count).
+  * unused columns never materialize. The dialect was checked on the driver
+  * (`DwcaDataSource.resolve`).
   */
-final class DwcaPartitionReader(path: String, td: TableDescriptor, required: StructType,
+final class DwcaPartitionReader(part: DwcaFilePartition, td: TableDescriptor, required: StructType,
     pushed: Array[Filter])
     extends PartitionReader[InternalRow] {
 
@@ -342,21 +486,23 @@ final class DwcaPartitionReader(path: String, td: TableDescriptor, required: Str
   private val parser: CsvParser = {
     val settings = new CsvParserSettings
     settings.getFormat.setDelimiter(d.fieldsTerminatedBy)
-    // empty fieldsEnclosedBy disables quote handling (the DwCA default,
-    // same convention as Spark's CSV option): \u0000 never appears in
-    // text data, so no quoting ever triggers
+    // empty fieldsEnclosedBy disables quote handling (the DwCA default):
+    // \uffff is a Unicode noncharacter, so no quoting ever triggers. Not
+    // \u0000, Spark CSV's choice: that is also univocity's "no character
+    // read yet", and an input with no record after the header lines would
+    // end in one all-null row.
     settings.getFormat.setQuote(
-      if (d.fieldsEnclosedBy.isEmpty) '\u0000' else d.fieldsEnclosedBy.charAt(0))
+      if (d.fieldsEnclosedBy.isEmpty) '\uffff' else d.fieldsEnclosedBy.charAt(0))
     d.linesTerminatedBy match {
       case "" | "\n" | "\r\n" | "\r" => settings.setLineSeparatorDetectionEnabled(true)
-      case sep if sep.length == 1 => settings.getFormat.setLineSeparator(sep)
-      case sep => throw new IllegalArgumentException(
-        s"unsupported linesTerminatedBy ${sep.map(c => f"\\u${c.toInt}%04x").mkString}: " +
-          "single character or \\n/\\r\\n/\\r only")
+      case sep => settings.getFormat.setLineSeparator(sep) // one character (checked on the driver)
     }
-    settings.setNumberOfRowsToSkip(d.ignoreHeaderLines.toLong)
-    // match Spark CSV READ defaults (the classic reader's parse): no
-    // whitespace trimming on unquoted fields
+    // a byte range starts after the header lines
+    if (part.whole) settings.setNumberOfRowsToSkip(d.ignoreHeaderLines.toLong)
+    // match Spark CSV READ defaults: no comment lines, no whitespace
+    // trimming on unquoted fields, up to 20,480 physical columns
+    settings.getFormat.setComment('\u0000')
+    settings.setMaxColumns(20480)
     settings.setIgnoreLeadingWhitespaces(false)
     settings.setIgnoreTrailingWhitespaces(false)
     // pruning reaches the parse: only the required positional columns are
@@ -364,13 +510,17 @@ final class DwcaPartitionReader(path: String, td: TableDescriptor, required: Str
     // records)
     if (selectedIndexes.nonEmpty)
       settings.selectIndexes(selectedIndexes.map(Integer.valueOf).toSeq: _*)
-    settings.setMaxCharsPerColumn(1 << 24)
+    // unbounded: a growing buffer, as Spark's CSV source (a fixed width
+    // allocates it whole in every partition reader)
+    settings.setMaxCharsPerColumn(-1)
     new CsvParser(settings)
   }
 
   private val reader: java.io.Reader = {
-    val in = new java.io.InputStreamReader(
-      new java.io.FileInputStream(path), java.nio.charset.Charset.forName(d.encoding))
+    val bytes =
+      if (part.whole) new FileInputStream(part.path)
+      else new LineRangeInputStream(part.path, part.start, part.end)
+    val in = new java.io.InputStreamReader(bytes, Charset.forName(d.encoding))
     parser.beginParsing(in)
     in
   }
@@ -379,8 +529,7 @@ final class DwcaPartitionReader(path: String, td: TableDescriptor, required: Str
 
   /** Parsed value of a filter-referenced field for the CURRENT row, after
     * the same NA-token normalization the output path applies — so pushed
-    * `IsNull` decides exactly like a post-scan filter over the classic
-    * frame would.
+    * `IsNull` decides exactly like a post-scan filter would.
     */
   private def rawValue(name: String): String = selPos.get(name) match {
     case Some(sel) =>
@@ -417,8 +566,8 @@ final class DwcaPartitionReader(path: String, td: TableDescriptor, required: Str
       values(i) = producers(i) match {
         case Left(sel) =>
           val v = if (sel < row.length) row(sel) else null
-          // pandas NA-token normalization — identical to the classic
-          // reader (empty fields already arrive as null from univocity)
+          // pandas NA-token normalization (empty fields already arrive
+          // as null from univocity)
           if (v == null || DwcaPartitionReader.NaTokens.contains(v)) null
           else UTF8String.fromString(v)
         case Right(const) => const

@@ -79,4 +79,34 @@ class DwcaSourceMemoSpec extends AnyFunSuite {
     assert(second.size == 1)
     assert(first.forall(!_.exists()), "the stale extraction was left behind")
   }
+
+  test("the extractions still memoized at JVM exit are deleted") {
+    // A child JVM with its own java.io.tmpdir: the hook runs at its exit.
+    val tmp = Files.createTempDirectory("source-memo-exit").toFile
+    val zip = newZip(4)
+    val java = new File(System.getProperty("java.home"), "bin/java").getPath
+    val child = new ProcessBuilder(java, s"-Djava.io.tmpdir=${tmp.getPath}",
+      "-cp", System.getProperty("java.class.path"), "graft.ExtractionExitProbe", zip.getPath)
+      .redirectErrorStream(true).start()
+    val out = new String(child.getInputStream.readAllBytes()).trim
+    assert(child.waitFor() == 0, out)
+    val made = out.linesIterator.toSeq.last.split(",").filter(_.nonEmpty).map(new File(_))
+    assert(made.nonEmpty && made.forall(_.toPath.startsWith(tmp.toPath)), out)
+    assert(made.forall(!_.exists()), s"left behind: ${made.mkString(", ")}")
+    DwcaArchive.deleteTree(tmp)
+  }
+}
+
+/** Resolves the zip `args(0)` through the `dwca` source, as `load()` does,
+  * and prints the extraction directories that then exist under
+  * java.io.tmpdir; the source's exit hook should then delete them.
+  */
+object ExtractionExitProbe {
+  def main(args: Array[String]): Unit = {
+    val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", args(0)))
+    require(new graft.sources.DwcaDataSource().inferSchema(options).fieldNames.contains("id"))
+    println(new File(System.getProperty("java.io.tmpdir")).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("dwca-")).map(_.getPath).mkString(","))
+  }
 }
