@@ -45,15 +45,16 @@ object ArchiveValidator {
       if (coreType.nonEmpty) coreType.substring(coreType.lastIndexOf('/') + 1)
       else "unknown"
 
-    val coreReport: DFValidationReport = coreType match {
+    // one call, and so one job, per table: the checks and its breakdowns
+    val (coreReport, coreBreakdowns) = coreType match {
       case MetaXml.OccurrenceRowType =>
         val idf = if (idFields.isEmpty) Seq("occurrenceID") else idFields
-        Validator.validateOccurrence(coreDf, idf, getIdDwcTerm(coreDf, core),
-          referenceCompatibleNumericWarnings)
+        Validator.occurrence(coreDf, idf, getIdDwcTerm(coreDf, core),
+          referenceCompatibleNumericWarnings, breakdowns = true)
       case MetaXml.EventRowType =>
-        Validator.validateEvent(coreDf, referenceCompatibleNumericWarnings)
+        Validator.event(coreDf, referenceCompatibleNumericWarnings, breakdowns = true)
       case other =>
-        DFValidationReport(
+        (DFValidationReport(
           record_type = other,
           record_count = 0,
           errors = Seq("UNSUPPORTED_CORE_TYPE"),
@@ -67,20 +68,20 @@ object ArchiveValidator {
           // the reference never assigns vocab_reports on this branch —
           // jsonpickle emits null; None serializes to null (parity) without
           // putting a Scala null into a Seq-typed field
-          vocab_reports = None)
+          vocab_reports = None),
+          Breakdowns.generate(coreDf))
     }
 
-    var breakdowns = Breakdowns.generate(coreDf)
+    var breakdowns = coreBreakdowns
 
     val extensionReports =
       if (coreType == MetaXml.EventRowType)
         archive.descriptor.extensions
           .filter(_.rowType == MetaXml.OccurrenceRowType)
           .map { ext =>
-            val extDf = archive.read(ext)
-            val report = Validator.validateOccurrence(extDf, idFields, "",
-              referenceCompatibleNumericWarnings)
-            Breakdowns.generate(extDf).foreach { case (k, v) =>
+            val (report, extBreakdowns) = Validator.occurrence(archive.read(ext), idFields, "",
+              referenceCompatibleNumericWarnings, breakdowns = true)
+            extBreakdowns.foreach { case (k, v) =>
               breakdowns = Breakdowns.overwrite(breakdowns, k, v)
             }
             report

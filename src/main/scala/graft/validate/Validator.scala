@@ -3,6 +3,7 @@ package graft.validate
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
@@ -16,8 +17,9 @@ import Lenient.qcol
   * Re-expresses the reference's per-check full scans (reference:
   * dwc_validator/validate.py — ~10 scans per report, SURVEY.md §3) as ONE
   * fused aggregation pass: every check below is an algebraic aggregate, and
-  * the vocabulary non-matching samples ride the same pass as extra grouping
-  * sets, so a report is a single job over the data (one more per further
+  * the vocabulary non-matching samples and the breakdowns ([[Breakdowns]])
+  * ride the same pass as extra count-only sets, so one job per table serves
+  * the checks, the samples and the breakdowns (one more per further
   * [[MaxAggsPerPass]] aggregates on wide archives). At 100 TB that is the
   * difference between 10 scans and 1.
   */
@@ -68,19 +70,37 @@ object Validator {
       idFields: Seq[String] = Nil,
       idTerm: String = "",
       referenceCompatibleNumericWarnings: Boolean = false): DFValidationReport =
-    validateDataFrame(df, "Occurrence", idFields, idTerm,
-      includeTaxonomy = true,
-      vocabFields = OccurrenceVocabs,
-      referenceCompatibleNumericWarnings)
+    occurrence(df, idFields, idTerm, referenceCompatibleNumericWarnings, breakdowns = false)._1
 
   /** Reference: validate.py:87-131 (`validate_event_dataframe`). */
   def validateEvent(
       df: DataFrame,
       referenceCompatibleNumericWarnings: Boolean = false): DFValidationReport =
+    event(df, referenceCompatibleNumericWarnings, breakdowns = false)._1
+
+  /** [[validateOccurrence]], plus `df`'s [[Breakdowns.generate]] from the
+    * same job when `breakdowns` (else empty).
+    */
+  private[validate] def occurrence(
+      df: DataFrame,
+      idFields: Seq[String],
+      idTerm: String,
+      referenceCompatibleNumericWarnings: Boolean,
+      breakdowns: Boolean): (DFValidationReport, ListMap[String, ListMap[String, Long]]) =
+    validateDataFrame(df, "Occurrence", idFields, idTerm,
+      includeTaxonomy = true,
+      vocabFields = OccurrenceVocabs,
+      referenceCompatibleNumericWarnings, breakdowns)
+
+  /** [[validateEvent]], plus breakdowns as in [[occurrence]]. */
+  private[validate] def event(
+      df: DataFrame,
+      referenceCompatibleNumericWarnings: Boolean,
+      breakdowns: Boolean): (DFValidationReport, ListMap[String, ListMap[String, Long]]) =
     validateDataFrame(df, "Event", Seq("eventID"), "",
       includeTaxonomy = false,
       vocabFields = Seq("geodeticDatum" -> Vocabularies.geodeticDatumLower),
-      referenceCompatibleNumericWarnings)
+      referenceCompatibleNumericWarnings, breakdowns)
 
   // ---------------------------------------------------------------------
   // fused single-pass implementation
@@ -168,7 +188,8 @@ object Validator {
       idTerm: String,
       includeTaxonomy: Boolean,
       vocabFields: Seq[(String, Seq[String])],
-      referenceCompatibleNumericWarnings: Boolean): DFValidationReport = {
+      referenceCompatibleNumericWarnings: Boolean,
+      breakdowns: Boolean): (DFValidationReport, ListMap[String, ListMap[String, Long]]) = {
 
     val cols = df.columns.toSeq
     val has = cols.toSet
@@ -182,13 +203,29 @@ object Validator {
     // single aggregate would exceed spark.sql.codegen.maxFields (default
     // 100) and silently drop out of whole-stage codegen. Each chunk stays
     // codegen'd; a second scan of a columnar source beats an interpreted
-    // single scan. The vocabulary samples ride the first chunk.
-    val chunks = aggs.toSeq.grouped(MaxAggsPerPass).toSeq
+    // single scan. The vocabulary samples and the breakdowns ride the first
+    // chunk.
+    // The duplicate-id count rides the first chunk too, as a key set over
+    // the id's values instead of countDistinct, whose plan groups every row
+    // of every aggregate by the id in a shuffle of its own. Other id types
+    // keep countDistinct: a value cast to string is not always its own
+    // group (-0.0 and 0.0).
+    val surplusId = resolvedIds.map(_._2).find(r =>
+      aggs.contains(s"iddist__$r") && df.schema(r).dataType == StringType)
+    val chunks = aggs.toSeq.filterNot { case (name, _) => surplusId.exists(r => name == s"iddist__$r") }
+      .grouped(MaxAggsPerPass).toSeq
     val sampleKeys = vocabFields.collect { case (f, vocabLower) if has(f) =>
       f -> unrecognisedValue(f, vocabLower)
     }
-    val (firstCounts, samples) = aggregateWithSamples(df, chunks.head, sampleKeys)
-    val collected: Map[String, Long] = firstCounts ++ chunks.tail.flatMap(plainCounts(df, _))
+    val breakdownKeys = if (breakdowns) Breakdowns.keys(df) else Nil
+    val (firstCounts, groups) = aggregateWithSets(Breakdowns.withEventTime(df, breakdownKeys), cols,
+      chunks.head, sampleKeys.map(_._2 -> Cut.Sample) ++ surplusId.map(qcol(_) -> Cut.Surplus) ++
+        breakdownKeys.map(_.set))
+    val samples = sampleKeys.map(_._1).zip(groups.map(_.map(_._1))).toMap
+    val counts = firstCounts ++ chunks.tail.flatMap(plainCounts(df, _))
+    // distinct non-null values = non-null values − the surplus
+    val collected: Map[String, Long] = counts ++ surplusId.map(r => s"iddist__$r" ->
+      (counts(s"cc__$r") - groups(sampleKeys.size).headOption.fold(0L)(_._2)))
     def n(name: String): Long = collected(name)
 
     val recordCount = n("__n")
@@ -259,7 +296,7 @@ object Validator {
     def grp(name: String): Long =
       if (aggs.contains(s"grp__$name")) n(s"grp__$name") else 0L
 
-    DFValidationReport(
+    val report = DFValidationReport(
       record_type = recordType,
       record_count = recordCount,
       errors = errors.toSeq,
@@ -271,6 +308,7 @@ object Validator {
       records_with_temporal_count = grp("temporal"),
       records_with_recorded_by_count = grp("recordedBy"),
       vocab_reports = Some(vocabReports))
+    (report, Breakdowns.assemble(breakdownKeys, groups.drop(sampleKeys.size + surplusId.size)))
   }
 
   /** Distinct unrecognised values fetched per vocabulary field: the
@@ -286,46 +324,85 @@ object Validator {
     when(qcol(field).isNotNull && !lower(c).isin(vocabLower: _*), c)
   }
 
-  /** The first aggregate chunk and the vocabulary samples in ONE job.
+  /** How the fused job cuts the groups of one key set: `Sample` keeps the
+    * first [[VocabSampleFetch]] by value, `Top` the first
+    * [[Breakdowns.TopLimit]] by count desc then value, `Whole` every group up
+    * to [[Breakdowns.HistogramMaxGroups]] + 1, in any order, and `Surplus`
+    * one group whose count is the set's rows beyond the first of each value
+    * (count − distinct).
+    */
+  private[validate] sealed trait Cut
+  private[validate] object Cut {
+    case object Sample extends Cut
+    case object Top extends Cut
+    case object Whole extends Cut
+    case object Surplus extends Cut
+  }
+
+  /** `chunk`'s aggregates over every row of `df` and each key set's groups,
+    * in ONE job.
     *
     * Grouping sets built by hand: set 0 holds every row, grouped to one row
-    * of the fused aggregates; set i+1 holds a row only where vocabulary
-    * field i is present and unrecognised, grouped by that value. (Spark's
-    * GROUPING SETS would copy every row into every set, and with it the
-    * distinct-id aggregation state.) A `row_number()` per set, ordered by
-    * value, cuts each sample to [[VocabSampleFetch]] distinct values; the
-    * bound is below Spark's window group limit threshold, so the cut also
-    * runs before the window's shuffle. Returns the chunk's counts and each
-    * field's sorted distinct unrecognised values.
+    * of the fused aggregates; set i+1 holds a row only where key i is
+    * non-null, grouped by that value. Only set 0 carries the `payload`
+    * columns the aggregates read; every other set carries typed nulls, so a
+    * key set's row feeds no aggregate state and `count(lit(1))` is its
+    * group's count. (Spark's GROUPING SETS would copy every row into every
+    * set.) An empty `chunk` drops set 0.
+    *
+    * One window order over the groups, per set, cuts them. It ties every
+    * group of a `Whole` or `Surplus` set, so `rank() <= TopLimit`, which
+    * Spark plans as a WindowGroupLimit, cuts the `Sample` and `Top` sets in
+    * every task before the shuffle that brings a set to one task, and keeps
+    * the tied sets whole; `row_number()` then caps a histogram, and a sum
+    * over the ties totals a `Surplus` set's groups seen more than once.
+    * Returns the chunk's counts and each key set's (value, count) groups in
+    * cut order.
     */
-  private def aggregateWithSamples(
+  private[validate] def aggregateWithSets(
       df: DataFrame,
+      payload: Seq[String],
       chunk: Seq[(String, Column)],
-      keys: Seq[(String, Column)]): (Map[String, Long], Map[String, Seq[String]]) = {
-    if (keys.isEmpty) (plainCounts(df, chunk), Map.empty)
+      keys: Seq[(Column, Cut)]): (Map[String, Long], Seq[Seq[(String, Long)]]) = {
+    if (keys.isEmpty) (plainCounts(df, chunk), Nil)
     else {
-      val aliased = chunk.map { case (n, c) => c.as(n) }
-      val sets = array((lit(null).cast("string") +: keys.map(_._2)).zipWithIndex.map {
-        case (k, i) => struct(lit(i).as("__set"), k.as("__key"))
-      }: _*)
+      val types = df.schema.map(f => f.name -> f.dataType).toMap
+      def set(i: Int, key: Column, row: String => Column) =
+        struct(lit(i).as("__set") +: key.cast("string").as("__key") +: payload.map(c => row(c).as(c)): _*)
+      val set0 = if (chunk.isEmpty) Nil else Seq(set(0, lit(null), qcol))
+      val sets = set0 ++ keys.zipWithIndex.map { case ((k, _), i) =>
+        set(i + 1, k, c => lit(null).cast(types(c)))
+      }
+      def in(cut: Cut) = col("__set").isin(keys.indices.filter(keys(_)._2 == cut).map(_ + 1): _*)
+      val aliased = count(lit(1)).as("__cnt") +: chunk.map { case (n, c) => c.as(n) }
+      val w = Window.partitionBy("__set").orderBy(col("__top").desc, col("__value").asc)
       val rows = df
-        .select(col("*"), inline(sets))
+        .select(inline(array(sets: _*)))
         .filter(col("__set") === 0 || col("__key").isNotNull)
         .groupBy("__set", "__key")
         .agg(aliased.head, aliased.tail: _*)
-        .withColumn("__rn", row_number().over(Window.partitionBy("__set").orderBy("__key")))
-        .filter(col("__rn") <= VocabSampleFetch)
+        .filter(!in(Cut.Surplus) || col("__cnt") > 1)
+        .select(col("*"), when(in(Cut.Top), col("__cnt")).as("__top"),
+          when(in(Cut.Sample) || in(Cut.Top), col("__key")).as("__value"))
+        .select(col("*"), rank().over(w).as("__rk"))
+        .filter(col("__rk") <= Breakdowns.TopLimit &&
+          (col("__rk") <= VocabSampleFetch || !in(Cut.Sample)))
+        // cap+1 rows so overflow is DETECTED: a bare cut at the cap would
+        // silently keep an arbitrary subset of groups
+        .select(col("*"), row_number().over(w).as("__rn"), sum(col("__cnt") - 1).over(w).as("__surplus"))
+        .filter(col("__rn") <= Breakdowns.HistogramMaxGroups + 1 && (col("__rn") === 1 || !in(Cut.Surplus)))
         .collect()
         .groupBy(_.getAs[Int]("__set"))
       // no set-0 row on empty input, where every aggregate of
       // buildAggregates (count/countDistinct) is 0
       val all = rows.get(0).map(_.head)
       val counts = chunk.map { case (n, _) => n -> all.fold(0L)(_.getAs[Long](n)) }.toMap
-      val samples = keys.zipWithIndex.map { case ((f, _), i) =>
-        f -> rows.getOrElse(i + 1, Array.empty[Row])
-          .sortBy(_.getAs[Int]("__rn")).map(_.getAs[String]("__key")).toSeq
-      }.toMap
-      (counts, samples)
+      val groups = keys.indices.map { i =>
+        val value = if (keys(i)._2 == Cut.Surplus) "__surplus" else "__cnt"
+        rows.getOrElse(i + 1, Array.empty[Row]).sortBy(_.getAs[Int]("__rn"))
+          .map(r => r.getAs[String]("__key") -> r.getAs[Long](value)).toSeq
+      }
+      (counts, groups)
     }
   }
 

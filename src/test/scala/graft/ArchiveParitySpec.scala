@@ -129,11 +129,13 @@ class ArchiveParitySpec extends AnyFunSuite {
       zos.closeEntry()
     } finally zos.close()
     val archive = graft.dwca.DwcaArchive.open(spark, zipFile.getAbsolutePath)
-    assert(archive.descriptor.extensions.size == 2)
-    assert(archive.coreDataFrame.count() == 5)
-    val occExt = archive.descriptor.extensions
-      .find(_.rowTypeLocalName == "Occurrence").get
-    assert(archive.joined(occExt).count() == 5)
+    try {
+      assert(archive.descriptor.extensions.size == 2)
+      assert(archive.coreDataFrame.count() == 5)
+      val occExt = archive.descriptor.extensions
+        .find(_.rowTypeLocalName == "Occurrence").get
+      assert(archive.joined(occExt).count() == 5)
+    } finally archive.close()
   }
 
   test("pandas NA tokens null out; ignoreHeaderLines=2 skips both preamble lines") {

@@ -6,25 +6,40 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import graft.dwca.DwcaArchive
+import graft.model.DwCAValidationReport
 import graft.validate.{ArchiveValidator, Breakdowns, Validator}
 
-/** The archive path reads each table once per public call: the validator's
-  * fused aggregate carries the vocabulary samples, every breakdown is one
-  * grouping-sets job, the reader builds one projection, and a validated
-  * zip leaves no extraction behind. Also the edge cases of those single
-  * jobs: empty input, ties at the top-20 cut, long unrecognised samples.
+/** The archive path reads each table once: one job per table serves the
+  * checks, the vocabulary samples and the breakdowns, so `validateArchive`
+  * reads each row once, and `validateOccurrence` and `Breakdowns.generate`
+  * each read the table once on their own. The reader builds one
+  * projection, and a validated zip leaves no extraction behind. Also the
+  * edge cases of that job: empty input, ties at the top-20 cut, long
+  * unrecognised samples, the histogram cap, and the per-task cut of the
+  * top-20 and sample sets.
   */
-class SingleScanSpec extends AnyFunSuite {
+class SingleScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with BeforeAndAfterAll {
   private def spark = TestSpark.spark
+
+  private val made = scala.collection.mutable.ArrayBuffer[File]()
+  override def afterAll(): Unit = made.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 
   private def stringDf(cols: Seq[String], rows: Seq[Seq[String]]) = {
     val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
@@ -39,7 +54,7 @@ class SingleScanSpec extends AnyFunSuite {
   private def archiveDir(terms: Seq[String], rows: Seq[Seq[String]],
       defaults: Seq[(String, String)] = Nil): File = {
     val dir = Files.createTempDirectory("single-scan").toFile
-    dir.deleteOnExit()
+    made += dir
     val fields = terms.zipWithIndex.map { case (t, i) =>
       s"""    <field index="${i + 1}" term="$Dwc$t"/>"""
     } ++ defaults.map { case (t, v) => s"""    <field term="$Dwc$t" default="$v"/>""" }
@@ -80,16 +95,39 @@ class SingleScanSpec extends AnyFunSuite {
     read.get
   }
 
-  test("validateOccurrence and Breakdowns.generate each read the table once") {
-    val terms = Seq("occurrenceID", "basisOfRecord", "geodeticDatum", "scientificName",
-      "family", "year", "month", "day", "eventDate")
-    val rows = (0 until 40).map { i =>
-      Seq(s"o$i", if (i % 5 == 0) s"BAD$i" else "HumanObservation",
-        if (i % 7 == 0) "" else if (i % 3 == 0) s"DATUM$i" else "WGS84",
-        s"sp${i % 9}", s"fam${i % 4}", s"${2000 + i % 3}", s"${1 + i % 12}", s"${1 + i % 28}",
-        f"20${10 + i % 5}-0${1 + i % 9}-${1 + i % 28}%02d")
+  /** The executed plans of the queries `body` runs. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    val df = DwcaArchive.open(spark, archiveDir(terms, rows).getPath).coreDataFrame
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener hears of a query after its action returns
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private val terms = Seq("occurrenceID", "basisOfRecord", "geodeticDatum", "scientificName",
+    "family", "year", "month", "day", "eventDate")
+
+  /** 40 rows over [[terms]]: unrecognised vocabulary values, 9 names, 4
+    * families, dates.
+    */
+  private def occurrenceArchive(): File = archiveDir(terms, (0 until 40).map { i =>
+    Seq(s"o$i", if (i % 5 == 0) s"BAD$i" else "HumanObservation",
+      if (i % 7 == 0) "" else if (i % 3 == 0) s"DATUM$i" else "WGS84",
+      s"sp${i % 9}", s"fam${i % 4}", s"${2000 + i % 3}", s"${1 + i % 12}", s"${1 + i % 28}",
+      f"20${10 + i % 5}-0${1 + i % 9}-${1 + i % 28}%02d")
+  })
+
+  test("validateOccurrence and Breakdowns.generate each read the table once") {
+    val df = DwcaArchive.open(spark, occurrenceArchive().getPath).coreDataFrame
     var report: Option[graft.model.DFValidationReport] = None
     assert(recordsRead { report = Some(Validator.validateOccurrence(df, Seq("occurrenceID"))) } == 40)
     val r = report.get
@@ -195,5 +233,66 @@ class SingleScanSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Breakdowns.generate(spark.range(n).select(
       (col("id") % 12000).cast("string").as("day"), lit("sp").as("scientificName"))))
     assert(e.getMessage.contains("HistogramMaxGroups"), e.getMessage)
+  }
+
+  test("validateArchive reads each table once and equals the composed public calls") {
+    val dir = occurrenceArchive()
+    var report: Option[DwCAValidationReport] = None
+    assert(recordsRead {
+      report = Some(ArchiveValidator.validateArchive(spark, dir.getPath, Seq("occurrenceID")))
+    } == 40)
+    val archive = DwcaArchive.open(spark, dir.getPath)
+    val df = archive.coreDataFrame
+    val core = archive.descriptor.core
+    val composed = DwCAValidationReport(
+      valid = true, core_type = core.rowType, dataset_type = "Occurrence",
+      core = Validator.validateOccurrence(df, Seq("occurrenceID"),
+        ArchiveValidator.getIdDwcTerm(df, core)),
+      extensions = Nil, breakdowns = Breakdowns.generate(df))
+    assert(report.get == composed)
+    assert(composed.breakdowns.keys.toSeq == Seq("year", "month", "day", "scientificName", "family"))
+    assert(composed.core.vocabReports.find(_.field == "basisOfRecord").get.unrecognised_count == 8)
+  }
+
+  test("an Event core with an Occurrence extension reads the core rows plus the extension rows") {
+    val path = TestSpark.resourcePath("/event_archives/dwca-simple")
+    var report: Option[DwCAValidationReport] = None
+    // 5 events + 5 occurrences; the MeasurementOrFact extension is not validated
+    assert(recordsRead { report = Some(ArchiveValidator.validateArchive(spark, path)) } == 10)
+    val archive = DwcaArchive.open(spark, path)
+    val coreDf = archive.coreDataFrame
+    val extDf = archive.read(archive.descriptor.extensions.find(_.rowTypeLocalName == "Occurrence").get)
+    val breakdowns = Breakdowns.generate(extDf).foldLeft(Breakdowns.generate(coreDf)) {
+      case (b, (k, v)) => Breakdowns.overwrite(b, k, v)
+    }
+    val core = Validator.validateEvent(coreDf)
+    assert(report.get == DwCAValidationReport(
+      valid = core.errors.isEmpty, core_type = archive.descriptor.core.rowType, dataset_type = "Event",
+      core = core, extensions = Seq(Validator.validateOccurrence(extDf)), breakdowns = breakdowns))
+    assert(report.get.core.record_count == 5 && report.get.extensions.head.record_count == 5)
+  }
+
+  test("a histogram past the cap, reached through validateArchive, throws and names the field") {
+    val n = Breakdowns.HistogramMaxGroups + 1
+    val dir = archiveDir(Seq("occurrenceID", "day"), (0 until n).map(i => Seq(s"o$i", s"$i")))
+    val e = intercept[IllegalStateException](ArchiveValidator.validateArchive(spark, dir.getPath))
+    assert(e.getMessage.contains(s"HistogramMaxGroups=${Breakdowns.HistogramMaxGroups}"), e.getMessage)
+    assert(e.getMessage.contains("for field day"), e.getMessage)
+  }
+
+  test("the fused job cuts its sample and top-20 sets in every task before the shuffle to one task per set") {
+    val plans = executedPlans(ArchiveValidator.validateArchive(spark, occurrenceArchive().getPath))
+    val plan = plans.find(p => find(p)(_.isInstanceOf[WindowExec]).nonEmpty)
+      .getOrElse(fail(plans.mkString("\n")))
+    // the exchange that brings each set's groups to one task, for its sort
+    val toOneTask = collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name } == Seq("__set")
+        case _ => false
+      }) => e
+    }
+    assert(toOneTask.size == 1, plan.treeString)
+    val cuts = collect(toOneTask.head.child) { case l: WindowGroupLimitExec => l }
+    assert(cuts.exists(l => l.mode == Partial && l.limit == 20), plan.treeString)
   }
 }
